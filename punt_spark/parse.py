@@ -2,27 +2,29 @@
 
 Reference: /root/reference/lib/syslog/parser.go:11 (the RFC3164 regex),
 parser.go:47-106 (ParseRFC3164Inplace). The reference parses one line at a
-time inside a per-connection goroutine; here the same regex bank is applied
-to an entire Arrow batch at once.
+time inside a per-connection goroutine; here the same regex is applied to
+an entire Arrow batch at once.
 
 Two interchangeable implementations, tested equal:
 
-* ``parse_rfc3164`` — scalar pandas UDF returning a struct column. All six
-  capture groups extract in a single pass over the batch via pyarrow's RE2
-  ``extract_regex`` + C++ ``strptime`` (the contract path per BASELINE.json
-  input_hint: "vectorized pandas/Arrow UDFs, no per-row Python"; measured
-  2.05× the original pandas ``str.extract``+``to_datetime`` formulation,
-  which remains as the tested-equal fallback).
-* ``parse_rfc3164_native`` — pure Spark SQL expressions (``regexp_extract``
-  ×6 + ``to_timestamp``), JVM-side, whole-stage-codegen friendly. The fast
-  path at scale: zero Python, zero Arrow transfer.
+* ``with_parsed`` — a scalar Arrow UDF over ``parse_rfc3164_arrow``: one
+  RE2 ``extract_regex`` pass captures every field (day-of-month and
+  seconds included), then casts, bounds and error precedence run as
+  ``pyarrow.compute`` kernels into a ``StructArray``. No pandas, no
+  per-row Python. The UDF is marked non-deterministic so Spark evaluates
+  it exactly once per row (see :func:`with_parsed`).
+* ``with_parsed_native`` — pure Spark SQL expressions (``regexp_extract``
+  ×6 + ``to_timestamp``), JVM-side, whole-stage-codegen friendly. Zero
+  Python, zero Arrow transfer.
 
 Error semantics (parser.go:13-16, 56-106): a line yields exactly one of a
 parsed record or an error tag (Invalid Message / Invalid Priority /
 Invalid Timestamp / Invalid PID), error precedence matching the reference's
-check order. Divergence from the reference (documented in SURVEY.md §7):
-Punt forwards malformed rows downstream with stale struct contents
-(server.go:202-215, a bug); we route them to the errors side output only.
+check order. PRI or PID values beyond int32 are Invalid Priority / Invalid
+PID (the struct's declared types) rather than a task crash. Divergence
+from the reference (documented in SURVEY.md §7): Punt forwards malformed
+rows downstream with stale struct contents (server.go:202-215, a bug); we
+route them to the errors side output only.
 
 RFC3164 timestamps carry no year; the reference back-fills the *wall-clock*
 year (parser.go:73-84). For reproducibility the year is a pinned parameter.
@@ -30,76 +32,34 @@ year (parser.go:73-84). For reproducibility the year is a pinned parameter.
 
 from __future__ import annotations
 
-import re
-
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 # Port of the Go RE2 pattern at parser.go:11. Inner alternation `(.|\n)*`
-# rewritten `[\s\S]*` (equivalent, and keeps the group count at 6).
+# rewritten `[\s\S]*` (equivalent, and keeps the group count at 6). The
+# separator class is RE2's `\s`, spelled out: Python's and Java's `\s`
+# also match \v, so the oracle and the JVM-native twin would accept lines
+# that Go and the Arrow twin reject.
 RFC3164_REGEX = (
-    r"<([0-9]+)>([A-Z][a-z][a-z]\s{1,2}\d{1,2}\s\d{2}[:]\d{2}[:]\d{2})"
-    r"\s([\w][\w\d\.@-]*)\s([^: \[]+)(?:\[([0-9]+)\])?[: \[] ?([\s\S]*)"
+    r"<([0-9]+)>([A-Z][a-z][a-z][\t\n\f\r ]{1,2}\d{1,2}[\t\n\f\r ]"
+    r"\d{2}[:]\d{2}[:]\d{2})[\t\n\f\r ]([\w][\w\d\.@-]*)[\t\n\f\r ]"
+    r"([^: \[]+)(?:\[([0-9]+)\])?[: \[] ?([\s\S]*)"
 )
-# re.ASCII pins \w/\d/\s to ASCII — the RE2 semantics of both the Go
-# reference (parser.go:11) and the pyarrow fast path. Without it the
-# fallback alone would accept non-ASCII hostnames ('hést') and NBSP
-# separators, silently shifting behavior when pyarrow is absent.
-RFC3164_PATTERN = re.compile(RFC3164_REGEX, re.ASCII)
 
-# Named-group variant for the pyarrow RE2 fast path (extract_regex requires
-# named groups). Same pattern — the reference's Go regexp IS RE2
-# (parser.go:11), so RE2 semantics are the native semantics here.
+# The same pattern with named groups for pyarrow's RE2 ``extract_regex``
+# (the reference's Go regexp IS RE2, so RE2 semantics are the native
+# semantics here). The timestamp is captured in pieces — month, day,
+# clock and its seconds — so the rollover check needs no second pass.
 RFC3164_REGEX_NAMED = (
     r"<(?P<pri>[0-9]+)>"
-    r"(?P<ts_raw>[A-Z][a-z][a-z]\s{1,2}\d{1,2}\s\d{2}[:]\d{2}[:]\d{2})"
+    r"(?P<mon>[A-Z][a-z][a-z])\s{1,2}(?P<day>\d{1,2})"
+    r"\s(?P<clock>\d{2}[:]\d{2}[:](?P<sec>\d{2}))"
     r"\s(?P<hostname>[\w][\w\d\.@-]*)\s(?P<tag>[^: \[]+)"
     r"(?:\[(?P<pid>[0-9]+)\])?[: \[] ?(?P<content>[\s\S]*)"
 )
-_GROUPS = ["pri", "ts_raw", "hostname", "tag", "pid", "content"]
-
-try:  # C++ RE2 extraction (measured ~1.8× the Python-re path per batch)
-    import pyarrow as _pa
-    import pyarrow.compute as _pc
-
-    _ARROW_RE = True
-except ImportError:  # pragma: no cover
-    _ARROW_RE = False
-
-
-def _extract_groups(text: pd.Series) -> tuple[pd.DataFrame, pd.Series]:
-    """→ (capture-group frame, matched mask). PyArrow RE2 fast path with
-    the pandas Python-re path as fallback; the two are pinned equal by
-    tests/test_parse.py::test_arrow_extract_matches_python (one
-    convention difference is normalized here: RE2 yields '' for an
-    unparticipating optional group where Python re yields NaN — downstream
-    handles both, see pid_missing)."""
-    if _ARROW_RE:
-        arr = _pa.Array.from_pandas(text.astype(object), type=_pa.string())
-        res = _pc.extract_regex(arr, RFC3164_REGEX_NAMED)
-        matched = pd.Series(
-            _pc.is_valid(res).to_pandas().to_numpy(), index=text.index
-        )
-        cols = {}
-        for name in _GROUPS:
-            f = res.field(name)
-            if name == "ts_raw":
-                # normalize "Jan  2"-style padding while still in Arrow
-                # (RE2 replace — cheaper than the pandas str.replace)
-                f = _pc.replace_substring_regex(f, r"\s+", " ")
-            s = f.to_pandas()
-            s.index = text.index
-            # parent-null (non-matching) slots surface as '' — mask to NaN
-            # so error precedence sees "no match", not "bad priority"
-            cols[name] = s.where(matched)
-        return pd.DataFrame(cols), matched
-    ext = text.str.extract(RFC3164_PATTERN)
-    ext.columns = _GROUPS
-    ext["ts_raw"] = ext["ts_raw"].str.replace(r"\s+", " ", regex=True)
-    return ext, ext["pri"].notna()
 
 # Struct produced by the parse stage. `error` is null on success.
 PARSED_SCHEMA = (
@@ -113,112 +73,103 @@ ERR_INVALID_TIMESTAMP = "Invalid Timestamp"
 ERR_INVALID_PID = "Invalid PID"
 
 
-def _parse_ts(ts_norm: pd.Series, year: int) -> pd.Series:
-    """Whitespace-normalized "%b %d %H:%M:%S" → timestamp (NaT on any
-    invalid). Arrow C++ strptime fast path (measured 2.4× the pandas
-    strptime on a 200k batch) with one semantic repair: C strptime ROLLS
-    invalid calendar dates over ("Feb 30" → Mar 2) where Go's time.Parse —
-    the reference semantics (parser.go:69) — and pandas both reject, so a
-    parsed row whose day-of-month no longer equals the day claimed in the
-    string is nulled. Pinned equal to the pandas path by
-    tests/test_parse.py::test_arrow_extract_matches_python."""
-    if _ARROW_RE:
-        arr = _pa.Array.from_pandas(
-            (str(year) + " " + ts_norm).astype(object), type=_pa.string()
-        )
-        ts = _pc.strptime(
-            arr, format="%Y %b %d %H:%M:%S", unit="us", error_is_null=True
-        )
-        day_ext = _pc.extract_regex(
-            _pa.Array.from_pandas(ts_norm.astype(object), type=_pa.string()),
-            r"^[A-Za-z]{3}\s+(?P<d>\d{1,2})\s",
-        )
-        day_claimed = _pc.cast(
-            _pc.if_else(_pc.is_valid(day_ext), day_ext.field("d"), None),
-            _pa.int64(),
-        )
-        ok = _pc.fill_null(_pc.equal(_pc.day(ts), day_claimed), False)
-        out = _pc.if_else(ok, ts, _pa.scalar(None, _pa.timestamp("us")))
-        # ns dtype for bit-identical parity with the pandas fallback (the
-        # Spark conversion truncates to µs either way)
-        s = out.to_pandas().astype("datetime64[ns]")
-        s.index = ts_norm.index
-        return s
-    return pd.to_datetime(
-        str(year) + " " + ts_norm, format="%Y %b %d %H:%M:%S", errors="coerce"
+_I32_MAX = 2_147_483_647
+
+
+def parse_rfc3164_arrow(text: pa.Array, year: int, tz: str = "UTC") -> pa.StructArray:
+    """Vectorized parse of a batch of raw lines into ``PARSED_SCHEMA``
+    fields — the body of the :func:`with_parsed` UDF. ``tz`` is the zone
+    the year-less wall-clock timestamps are read in: the session time
+    zone, as in the JVM-native twin's ``to_timestamp``. ``ts`` comes back
+    as a zone-less array of UTC instants."""
+    groups = pc.extract_regex(text, RFC3164_REGEX_NAMED)
+    matched = pc.is_valid(groups)
+    # flatten() folds the struct's validity into each field: a line that
+    # does not match yields nulls, not '' (which would read "bad priority")
+    g = dict(zip((f.name for f in groups.type), groups.flatten()))
+
+    # Digit strings only (the regex guarantees it): float64 parses any
+    # length without overflow and is exact up to the int32 bound. RE2
+    # yields '' for the unparticipating optional pid group → pid 0.
+    pri = pc.cast(g["pri"], pa.float64())
+    pid = pc.cast(pc.if_else(pc.equal(g["pid"], ""), "0", g["pid"]), pa.float64())
+
+    # Both reference layouts ("Jan 02" / "Jan  2", parser.go:18-21) rejoin
+    # to one format; year pinned, never wall clock (parser.go:74 uses
+    # time.Now().Year()). C strptime ROLLS invalid dates and leap seconds
+    # over ("Feb 30" → Mar 2, ":60" → next minute) where Go's time.Parse
+    # (parser.go:69) rejects them, so a row whose day or second no longer
+    # equals the one in the string is an invalid timestamp.
+    ts = pc.strptime(
+        pc.binary_join_element_wise(str(year), g["mon"], g["day"], g["clock"], " "),
+        format="%Y %b %d %H:%M:%S",
+        unit="us",
+        error_is_null=True,
     )
-
-
-def parse_rfc3164_batch(text: pd.Series, year: int) -> pd.DataFrame:
-    """Vectorized parse of a batch of raw lines. Pure pandas — shared by the
-    Spark UDF and the pure-Python reference oracle so goldens pin one code
-    path."""
-    ext, matched = _extract_groups(text)
-
-    pri = pd.to_numeric(ext["pri"], errors="coerce")
-    # Both reference layouts ("Jan 02" / "Jan  2", parser.go:18-21) collapse
-    # to one format after whitespace normalization (done inside
-    # _extract_groups); year pinned, never wall clock (parser.go:74 uses
-    # time.Now().Year() — wall-clock dependent).
-    ts = _parse_ts(ext["ts_raw"], year)
-    pid_num = pd.to_numeric(ext["pid"], errors="coerce")
-    pid_missing = ext["pid"].isna() | (ext["pid"] == "")
-    pid = pid_num.fillna(0).astype("int64")
+    ts_ok = pc.and_(
+        pc.equal(pc.day(ts), pc.cast(g["day"], pa.int64())),
+        pc.equal(pc.second(ts), pc.cast(g["sec"], pa.int64())),
+    )
+    if tz != "UTC":
+        # Java reads a wall time in the session zone with the earlier
+        # offset when it is ambiguous and with the offset before the gap
+        # when a DST gap skips it; that is assume_timezone's "earliest"
+        # offset in both cases. Subtract it to get the UTC instant.
+        at = pc.assume_timezone(ts, tz, ambiguous="earliest", nonexistent="earliest")
+        ts = pc.subtract(ts, pc.subtract(pc.local_timestamp(at), pc.cast(at, ts.type)))
 
     # Error precedence mirrors ParseRFC3164Inplace's check order
     # (parser.go:56-106): match → priority → timestamp → pid. Values that
-    # don't fit the declared int32 schema count as INVALID, not as a job
-    # crash: a single adversarial line like <99999999999> would otherwise
-    # fail the whole task at Arrow conversion (Int64 → int32), violating
-    # the totality contract — and the JVM-native twin already tags these
-    # rows Invalid Priority / Invalid PID via try_cast.
-    _I32_MAX = 2_147_483_647
-    error = np.select(
-        [
-            ~matched,
-            pri.isna() | (pri > _I32_MAX),
-            ts.isna(),
-            (pid_num.isna() & ~pid_missing) | (pid_num > _I32_MAX),
-        ],
-        [
-            ERR_INVALID_MESSAGE,
-            ERR_INVALID_PRIORITY,
-            ERR_INVALID_TIMESTAMP,
-            ERR_INVALID_PID,
-        ],
-        default=None,
+    # don't fit the declared int32 schema are INVALID, like the JVM-native
+    # twin's try_cast — never a task crash on one adversarial line.
+    error = pc.case_when(
+        pc.make_struct(
+            pc.invert(matched),
+            pc.greater(pri, _I32_MAX),
+            pc.invert(pc.fill_null(ts_ok, False)),
+            pc.greater(pid, _I32_MAX),
+            field_names=["message", "priority", "timestamp", "pid"],
+        ),
+        ERR_INVALID_MESSAGE,
+        ERR_INVALID_PRIORITY,
+        ERR_INVALID_TIMESTAMP,
+        ERR_INVALID_PID,
     )
-    ok = pd.isna(pd.Series(error, index=text.index))
+    ok = pc.is_null(error)
 
-    out = pd.DataFrame(
-        {
-            "priority": pri.where(ok).astype("Int64"),
-            "ts": ts.where(ok),
-            "hostname": ext["hostname"].where(ok),
-            "tag": ext["tag"].where(ok),
-            "pid": pid.where(ok).astype("Int64"),
-            "content": ext["content"].where(ok),
-            "error": pd.Series(error, index=text.index, dtype=object),
-        }
+    def keep(a: pa.Array) -> pa.Array:
+        return pc.if_else(ok, a, pa.scalar(None, a.type))
+
+    return pa.StructArray.from_arrays(
+        [
+            pc.cast(keep(pri), pa.int32()),
+            keep(ts),
+            keep(g["hostname"]),
+            keep(g["tag"]),
+            pc.cast(keep(pid), pa.int32()),
+            keep(g["content"]),
+            error,
+        ],
+        names=["priority", "ts", "hostname", "tag", "pid", "content", "error"],
     )
-    return out
-
-
-def make_parse_udf(year: int):
-    """Scalar pandas UDF: text → parsed struct. The regex is compiled once
-    per executor (module global), matching the reference's package-level
-    compiled regex (parser.go:11)."""
-
-    @pandas_udf(PARSED_SCHEMA)
-    def parse_rfc3164(text: pd.Series) -> pd.DataFrame:
-        return parse_rfc3164_batch(text, year)
-
-    return parse_rfc3164
 
 
 def with_parsed(df: DataFrame, text_col: str = "text", year: int = 2017) -> DataFrame:
-    """Attach ``parsed`` struct + ``parse_ok`` flag via the pandas UDF path."""
-    parse_udf = make_parse_udf(year)
+    """Attach ``parsed`` struct + ``parse_ok`` flag via the Arrow UDF.
+
+    The UDF is marked non-deterministic so each row is parsed exactly
+    once: a deterministic Python UDF under a Project lets the optimizer
+    push a ``parse_ok`` filter below it, and ExtractPythonUDFs then
+    evaluates the UDF once for the Filter and again for the Project
+    (measured 2× parse work). Built per call, not at module level: a DDL
+    return type needs an active session."""
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+
+    @arrow_udf(PARSED_SCHEMA)
+    def parse_rfc3164(text: pa.Array) -> pa.Array:
+        return parse_rfc3164_arrow(text, year, tz)
+
+    parse_udf = parse_rfc3164.asNondeterministic()
     return df.withColumn("parsed", parse_udf(F.col(text_col))).withColumn(
         "parse_ok", F.col("parsed.error").isNull()
     )
@@ -261,7 +212,8 @@ def with_parsed_native(
     pid = F.coalesce(pid_num, F.lit(0))
 
     error = (
-        F.when(~matched, F.lit(ERR_INVALID_MESSAGE))
+        # NULL text matches nothing: Invalid Message, as in the Arrow twin
+        F.when(~F.coalesce(matched, F.lit(False)), F.lit(ERR_INVALID_MESSAGE))
         .when(pri.isNull(), F.lit(ERR_INVALID_PRIORITY))
         .when(ts.isNull(), F.lit(ERR_INVALID_TIMESTAMP))
         .when(pid_num.isNull() & ~pid_missing, F.lit(ERR_INVALID_PID))

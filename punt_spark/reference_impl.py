@@ -25,11 +25,23 @@ from datetime import datetime, timedelta, timezone
 from .config import PipelineConfig
 from .parse import (
     ERR_INVALID_MESSAGE,
+    ERR_INVALID_PID,
+    ERR_INVALID_PRIORITY,
     ERR_INVALID_TIMESTAMP,
     RFC3164_REGEX,
 )
 
-_PATTERN = re.compile(RFC3164_REGEX)
+# re.ASCII: \w and \d match ASCII only, as in Go's RE2 (parser.go:11)
+_PATTERN = re.compile(RFC3164_REGEX, re.ASCII)
+_I32_MAX = 2_147_483_647
+
+
+def _int32(digits: str) -> int | None:
+    """A digit string's value, or None beyond int32 — the PRI/PID struct
+    field type on the Spark side, where a larger value is invalid. The
+    length check comes first: int() refuses strings over 4300 digits."""
+    d = digits.lstrip("0") or "0"
+    return int(d) if len(d) <= 10 and int(d) <= _I32_MAX else None
 
 # Go layout "2006.01.02.15" etc. → strftime for the oracle side.
 _GO_TO_STRFTIME = [
@@ -56,13 +68,17 @@ def parse_line(line: str, year: int) -> tuple[dict | None, str | None]:
     if m is None:
         return None, ERR_INVALID_MESSAGE
     pri_s, ts_s, hostname, tag, pid_s, content = m.group(1, 2, 3, 4, 5, 6)
-    priority = int(pri_s)  # regex guarantees digits (parser.go:64-67)
+    priority = _int32(pri_s)  # regex guarantees digits (parser.go:64-67)
+    if priority is None:
+        return None, ERR_INVALID_PRIORITY
     ts_norm = re.sub(r"\s+", " ", ts_s)
     try:
         ts = datetime.strptime(f"{year} {ts_norm}", "%Y %b %d %H:%M:%S")
     except ValueError:
         return None, ERR_INVALID_TIMESTAMP
-    pid = int(pid_s) if pid_s else 0
+    pid = _int32(pid_s) if pid_s else 0
+    if pid is None:
+        return None, ERR_INVALID_PID
     return (
         {
             "priority": priority,

@@ -22,16 +22,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import AT_TIMESTAMP_FORMAT, PipelineConfig
+from .session import values_df
 
 
 def routes_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Materialize the Type registry (state.go:31-33) as a DataFrame."""
+    """Materialize the Type registry (state.go:31-33) as a VALUES table:
+    ``route()`` collects it and every routed plan broadcasts it, all
+    without a Spark job."""
     rows = [
         (t.name, t.prefix, t.mapping_type, t.java_date_format, t.transformer, t.sink_name)
         for t in cfg.types.values()
     ]
-    return spark.createDataFrame(
-        rows, "tag string, prefix string, mapping_type string, "
+    return values_df(
+        spark, rows, "tag string, prefix string, mapping_type string, "
         "date_format string, transformer string, sink string"
     )
 

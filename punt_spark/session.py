@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -18,7 +19,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #
 # * AQE on: runtime coalescing + skew-join splitting — load-bearing for the
 #   hot-conversation skew called out in SURVEY.md §4.
-# * Arrow on: every Python-side stage is a pandas UDF over Arrow batches.
+# * Arrow on: every Python-side stage is a pandas or Arrow UDF over Arrow
+#   batches.
 # * Session timezone pinned UTC: the reference formats ``@timestamp`` as
 #   ``2006-01-02T15:04:05+00:00`` (cluster.go:285); reproducibility demands
 #   wall-clock independence.
@@ -79,3 +81,35 @@ def get_spark(
         for k, v in conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _sql_string(v: object) -> str:
+    """``str(v)`` as a Spark SQL string literal. Spark reads backslash
+    escapes inside literals, so backslashes are escaped as well as
+    quotes."""
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def values_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A tiny constant table as a VALUES ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans ``Scan ExistingRDD``: every
+    action over it, ``collect()`` included, starts a Python-worker job just
+    to ship a few constant rows. A VALUES literal folds into the plan, so
+    collecting it or broadcasting it starts no job. Each cell is rendered
+    as ``CAST('<str(v)>' AS <type>)`` with the type from the DDL
+    ``schema``, so the columns carry the declared types; ``None`` becomes a
+    typed ``NULL``."""
+    fields = StructType.fromDDL(schema).fields
+    types = [f.dataType.simpleString() for f in fields]
+    cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+    cells = [
+        ", ".join(
+            f"CAST({'NULL' if v is None else _sql_string(v)} AS {t})"
+            for v, t in zip(r, types, strict=True)
+        )
+        for r in rows or [(None,) * len(types)]
+    ]
+    sql = "SELECT * FROM VALUES " + ", ".join(f"({c})" for c in cells)
+    sql += f" AS t({cols})"
+    return spark.sql(sql if rows else sql + " LIMIT 0")

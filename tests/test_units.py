@@ -4,6 +4,7 @@ import json
 import os
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -17,7 +18,7 @@ from punt_spark.config import (
 )
 from punt_spark.enrich import apply_lookup, apply_unixtime
 from punt_spark.framing import frame_newlines, frame_octet_counted, frame_octets_str
-from punt_spark.parse import parse_rfc3164_batch
+from punt_spark.parse import parse_rfc3164_arrow
 from punt_spark.route import route, routes_df
 from punt_spark.tail import tail
 from punt_spark.transform import apply_transformer
@@ -107,12 +108,15 @@ def test_octet_framing_roundtrip(payloads):
 @given(st.lists(st.text(max_size=80), min_size=1, max_size=20))
 @settings(max_examples=30, deadline=None)
 def test_parse_total(lines):
-    out = parse_rfc3164_batch(pd.Series(lines, dtype=object), 2017)
-    # every row lands in exactly one of parsed/errors
-    ok = out["error"].isna()
+    from punt_spark.reference_impl import parse_line
+
+    out = parse_rfc3164_arrow(pa.array(lines, pa.string()), 2017).to_pylist()
+    # every row lands in exactly one of parsed/errors, as the oracle says
     assert len(out) == len(lines)
-    assert (ok | out["error"].notna()).all()
-    assert (out.loc[ok, "priority"].notna()).all()
+    for line, row in zip(lines, out):
+        env, err = parse_line(line, 2017)
+        assert row["error"] == err, line
+        assert (row["priority"] is not None) == (err is None)
 
 
 # --- transformers --------------------------------------------------------------------
@@ -244,6 +248,72 @@ def test_route_catchall_and_unhandled(spark):
     routed2, unhandled2 = route(df, no_catch)
     assert routed2.count() == 1
     assert [r["tag"] for r in unhandled2.collect()] == ["nosuch"]
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group → (result, the group's job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_route_starts_no_spark_job(spark):
+    """The route registry is a VALUES LocalRelation: route() collects it
+    (catch-all row, date formats) without starting a Spark job."""
+    df = spark.createDataFrame([("logs", None)], "tag string, ts timestamp")
+    cfg = default_config()
+    (routed, _), jobs = _jobs_in(
+        spark, "route-registry-probe", lambda: route(df, routes_df(spark, cfg))
+    )
+    assert jobs == []
+    assert routed.columns  # the plan was built
+    # the probe sees jobs: the same collect over a Python-list frame runs one
+    _, jobs = _jobs_in(
+        spark,
+        "route-registry-control",
+        lambda: spark.createDataFrame([("a",)], "tag string").collect(),
+    )
+    assert len(jobs) >= 1
+
+
+def test_values_df_nulls_quotes_and_types(spark):
+    """values_df renders None as a typed NULL, keeps quotes and
+    backslashes, casts every cell to the declared type, and builds an
+    empty table from no rows."""
+    import datetime
+
+    from punt_spark.config import TypeConfig
+    from punt_spark.session import values_df
+
+    rows = [
+        ("*", "yyyy-MM-dd'T'HH", None, True, 3, -0.0),
+        ("it's", "a\\b \\'c", "z", False, None, float("nan")),
+    ]
+    schema = "tag string, fmt string, s string, b boolean, i int, d double"
+    df = values_df(spark, rows, schema)
+    assert df.schema.simpleString() == (
+        "struct<tag:string,fmt:string,s:string,b:boolean,i:int,d:double>"
+    )
+    got = [tuple(r) for r in df.collect()]
+    assert got[0] == rows[0] and str(got[0][5]) == "-0.0"
+    assert got[1][:5] == rows[1][:5] and got[1][5] != got[1][5]  # NaN
+    assert df.filter(F.col("s").isNull()).count() == 1
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    empty = values_df(spark, [], schema)
+    assert empty.schema.simpleString() == df.schema.simpleString()
+    assert empty.collect() == []
+    # a route date format with a quoted literal survives into route_key
+    cfg = default_config()
+    cfg.types = {"*": TypeConfig(name="*", prefix="t-", date_format="2006-01-02T15")}
+    ev = spark.createDataFrame(
+        [("x", datetime.datetime(2017, 3, 14, 4))], "tag string, ts timestamp"
+    )
+    routed, _ = route(ev, routes_df(spark, cfg))
+    assert routed.collect()[0]["route_key"] == "t-2017-03-14T04"
 
 
 # --- tail ---------------------------------------------------------------------------------
@@ -789,6 +859,22 @@ def test_parse_out_of_int32_priority_and_pid_tag_not_crash(spark):
     assert udf_rows["c1"] == (False, "Invalid Priority")
     assert udf_rows["c2"] == (False, "Invalid PID")
     assert udf_rows["c3"][0] is True
+
+
+def test_reference_parse_out_of_int32_priority_and_pid():
+    """The row-at-a-time oracle tags out-of-int32 PRI/PID invalid like
+    both Spark parsers, instead of returning the big int — including a
+    PRI longer than int() accepts."""
+    from punt_spark.reference_impl import parse_line
+
+    tail = "Mar 14 04:20:19 host tag"
+    assert parse_line(f"<2147483648>{tail}: x", 2017) == (None, "Invalid Priority")
+    assert parse_line(f"<{'9' * 5000}>{tail}: x", 2017) == (None, "Invalid Priority")
+    assert parse_line(f"<13>{tail}[2147483648]: y", 2017) == (None, "Invalid PID")
+    # priority is checked before pid (parser.go:56-106)
+    assert parse_line(f"<2147483648>{tail}[2147483648]: y", 2017)[1] == "Invalid Priority"
+    env, err = parse_line(f"<2147483647>{tail}[0002147483647]: z", 2017)
+    assert err is None and env["priority"] == env["pid"] == 2_147_483_647
 
 
 def test_lookup_duplicate_dim_keys_do_not_multiply_rows(spark):
